@@ -9,131 +9,154 @@ only inside each cluster — turning an O(n²) all-pairs problem into
 Σ O(|cluster|²) with k as the knob).
 
 Design for scale (Lloyd's algorithm, Spark-first — the MLlib shape):
-  * ASSIGNMENT IS ZERO-SHUFFLE AND VECTORIZED: one Arrow-batched pandas
-    UDF per pass computes the full (batch × k) squared-distance matrix as
-    a single matmul and takes the row argmin — a few fused flops per
-    (vector, centroid), ~1000× an interpreted HOF fold (same trade as
-    ``lsh_buckets_all``);
-  * the centroid UPDATE shuffles only k×dim rows: ``posexplode`` the
-    assigned vectors and ``groupBy(cluster, pos)`` with map-side combine
-    — partials collapse to k×dim per task before the exchange;
-  * centroids are the ONE documented driver action (MLlib does the same):
-    k×dim doubles collected per iteration and shipped back inside the UDF
-    closure — bounded state (k ≤ 2^16, dim ≤ 4096 → MBs), never corpus
-    rows;
-  * per-iteration cost = one corpus scan (persist the projected vectors
-    once) + one k×dim shuffle; n_iter is a small constant (default 5).
+  * ONE KERNEL, ``lloyd``, trains k-means centroids (one block) and the
+    PQ codebooks (one block per subspace, ``pq.pq_fit``);
+  * each round is ONE Arrow-batched ``mapInPandas`` pass over the
+    persisted vectors, zero shuffle: per batch it assigns every vector
+    to its nearest centroid (a single (batch × k) squared-distance
+    matmul + row argmin per block) and emits per-(block, centroid)
+    partial sums and counts — at most blocks×k rows per batch, the
+    grouped partial-aggregate pattern ``silhouette_labels`` also uses;
+  * the driver collects those rows, folds them and quantizes the means —
+    the ONE documented driver action per round (MLlib does the same):
+    bounded state (blocks×k×width doubles per batch), never corpus rows;
+    the new centroids ship back inside the next round's closure;
+  * per-round cost = one corpus scan, one job; n_iter is a small
+    constant (default 5) and the loop stops at the fixpoint.
 
 Determinism: centroid components are quantized to 6 decimals after every
-update (well above double noise, well below embedding resolution), the
-centroid matrix is sorted by cluster id, and ties break to the
-first/lowest id via stable argmin/argsort — assignment is therefore a
-pure per-row function, bit-stable across partitionings and runs.
+update (well above double noise, well below embedding resolution), a
+centroid's id is its position in the code-sorted centroid matrix, and
+ties break to the lowest position via stable argmin/argsort — assignment
+is therefore a pure per-row function, bit-stable across partitionings
+and runs.
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
+import math
+from typing import List
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import lsh_bucket
+from .similarity import _planes
 
 
-def _centroid_means(assigned: DataFrame, vec_col: str,
-                    cluster_col: str) -> DataFrame:
-    """Elementwise mean per cluster, quantized: (cluster_col, __centroid).
-    One small shuffle — groupBy(cluster, pos) partials are k×dim per
-    task."""
-    return (assigned
-            .select(cluster_col, F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy(cluster_col, "pos")
-            .agg(F.round(F.avg("v"), 6).alias("m"))
-            .groupBy(cluster_col)
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.m).alias("__centroid")))
+def _stack(col: pd.Series) -> np.ndarray:
+    """(rows × dim) float64 matrix from one Arrow batch of vectors."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in col.to_numpy()])
 
 
-def _collect_centroids(cent: DataFrame) -> Tuple[List[int], np.ndarray]:
-    """The documented driver action: materialize the k-row centroid frame
-    (k×dim doubles) sorted by cluster id."""
-    rows = sorted(cent.collect(), key=lambda r: r["__cid"])
-    cids = [int(r["__cid"]) for r in rows]
-    mat = np.array([r["__centroid"] for r in rows], dtype=np.float64)
-    return cids, mat
+def _sq_dists(x: np.ndarray, mat: np.ndarray) -> np.ndarray:
+    """(rows × k) squared L2 distances to the centroid rows of ``mat`` —
+    one matmul, clamped at 0 against cancellation."""
+    d = ((x * x).sum(axis=1)[:, None] - 2.0 * (x @ mat.T)
+         + (mat * mat).sum(axis=1)[None, :])
+    return np.maximum(d, 0.0, out=d)
 
 
-def _nearest_expr(cids: List[int], mat: np.ndarray, n: int):
+def _block_codes(x: np.ndarray, mats: List[np.ndarray]) -> np.ndarray:
+    """(rows × blocks) nearest-centroid positions: block b of each row
+    (the b-th ``mats[b].shape[1]``-wide slice) against ``mats[b]``. Ties
+    break to the first (lowest) position."""
+    w = mats[0].shape[1]
+    return np.stack([_sq_dists(x[:, b * w:(b + 1) * w], mat).argmin(axis=1)
+                     for b, mat in enumerate(mats)], axis=1)
+
+
+def lloyd(vecs: DataFrame, blocks: int, k: int, n_iter: int,
+          dim: int) -> List[np.ndarray]:
+    """Lloyd's loop over the ``__v`` array<double> column of the
+    (persisted) ``vecs``, run independently in each of ``blocks``
+    ``dim/blocks``-wide subspaces: k-means is ``blocks=1``, PQ codebook
+    training is ``blocks=m``. Returns one centroid matrix per block; a
+    centroid's id is its row position.
+
+    Round 0 assigns by hyperplane sign bits (``_planes(p_bits, dim/blocks,
+    seed=block)``, the planes of ``lsh_bucket``) — data-dependent,
+    seedless, reproducible. Each later round assigns to the nearest
+    current centroid. A round's new centroids are the 6-dp-quantized
+    means of its assignment, so exact equality with the previous round
+    IS the fixpoint test: the loop stops there instead of spending the
+    remaining rounds on a no-op. Empty clusters drop out (k is an upper
+    bound; neither SemDeDup nor PQ cares)."""
+    w = dim // blocks
+    p_bits = max(1, int(math.ceil(math.log2(max(2, k)))))
+    planes = [np.array(_planes(p_bits, w, seed=b)) for b in range(blocks)]
+    bit = 1 << np.arange(p_bits)
+
+    def _round(mats):
+        def _partials(it):
+            for pdf in it:
+                if pdf.empty:
+                    continue
+                x = _stack(pdf["__v"])
+                codes = (_block_codes(x, mats) if mats is not None else
+                         np.stack([(x[:, b * w:(b + 1) * w] @ p.T >= 0) @ bit
+                                   for b, p in enumerate(planes)], axis=1))
+                out = []
+                for b in range(blocks):
+                    c, inv = np.unique(codes[:, b], return_inverse=True)
+                    s = np.zeros((len(c), w))
+                    np.add.at(s, inv, x[:, b * w:(b + 1) * w])
+                    out.append(pd.DataFrame({
+                        "b": np.full(len(c), b, dtype=np.int32), "c": c,
+                        "n": np.bincount(inv), "s": list(s)}))
+                yield pd.concat(out)
+
+        acc = {}
+        for r in (vecs.select("__v")
+                  .mapInPandas(_partials,
+                               "b int, c bigint, n bigint, s array<double>")
+                  .collect()):
+            n, s = acc.get((r.b, r.c), (0, 0.0))
+            acc[(r.b, r.c)] = (n + r.n, s + np.asarray(r.s))
+        return [np.array([np.round(acc[key][1] / acc[key][0], 6)
+                          for key in sorted(acc) if key[0] == b])
+                for b in range(blocks)]
+
+    mats = _round(None)
+    for _ in range(n_iter):
+        new = _round(mats)
+        if all(a.shape == b.shape and (a == b).all()
+               for a, b in zip(new, mats)):
+            break
+        mats = new
+    return mats
+
+
+def _nearest_expr(mat: np.ndarray, n: int):
     """Arrow-batched top-``n`` nearest centroids for an array<double>
     column: returns struct<clusters: array<bigint>, sq_dist: double>
     (sq_dist = distance to the nearest). Ties break to the lowest
     cluster id (stable sort over the id-sorted matrix)."""
     from pyspark.sql.functions import pandas_udf
 
-    cid_arr = np.array(cids, dtype=np.int64)
-    c_sq = (mat * mat).sum(axis=1)               # (k,)
-    n = min(n, len(cids))
+    n = min(n, len(mat))
 
     @pandas_udf("clusters array<bigint>, sq_dist double")
     def _nearest(col: pd.Series) -> pd.DataFrame:
         if col.empty:
             return pd.DataFrame({"clusters": [], "sq_dist": []})
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        d = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ mat.T) + c_sq[None, :]
-        np.maximum(d, 0.0, out=d)
+        d = _sq_dists(_stack(col), mat)
         if n == 1:
             idx = d.argmin(axis=1)[:, None]      # first min = lowest cid
         else:
             idx = np.argsort(d, axis=1, kind="stable")[:, :n]
-        return pd.DataFrame({
-            "clusters": list(cid_arr[idx]),
-            "sq_dist": d[np.arange(len(x)), idx[:, 0]],
-        })
+        return pd.DataFrame({"clusters": list(idx),
+                             "sq_dist": d[np.arange(len(d)), idx[:, 0]]})
 
     return _nearest
 
 
-def _assign(vecs: DataFrame, cids: List[int], mat: np.ndarray) -> DataFrame:
-    nearest = _nearest_expr(cids, mat, 1)
-    return (vecs.select("__id", "__v", nearest("__v").alias("__a"))
+def _assign(vecs: DataFrame, mat: np.ndarray) -> DataFrame:
+    return (vecs.select("__id", "__v", _nearest_expr(mat, 1)("__v")
+                        .alias("__a"))
             .select("__id", "__v", F.col("__a.clusters")[0].alias("cluster"),
                     F.col("__a.sq_dist").alias("sq_dist")))
-
-
-def _fit_centroids(vecs: DataFrame, k: int, n_iter: int,
-                   dim: int = 64) -> Tuple[List[int], np.ndarray]:
-    """Lloyd's loop. Init: elementwise means of the deterministic
-    hyperplane-LSH coarse buckets (one pass; same device as IVF) —
-    data-dependent, seedless, reproducible. Empty clusters simply drop
-    out of the centroid frame (k is an upper bound; the SemDeDup regime
-    doesn't care). ``dim`` must match the vector length (the init planes
-    are dim-length; a longer plane nulls the dot and collapses every
-    vector into one bucket — the PQ subspace bug this parameter fixes)."""
-    import math
-    planes = max(1, int(math.ceil(math.log2(max(2, k)))))
-    init = vecs.withColumn(
-        "__cid", lsh_bucket(F.col("__v"), planes, dim=dim).cast("bigint"))
-    cids, mat = _collect_centroids(
-        _centroid_means(init.select("__cid", "__v"), "__v", "__cid"))
-    for _ in range(n_iter):
-        assigned = _assign(vecs, cids, mat)
-        new_cids, new_mat = _collect_centroids(_centroid_means(
-            assigned.select(F.col("cluster").alias("__cid"), "__v"),
-            "__v", "__cid"))
-        # centroids are 6-dp-quantized, so exact equality IS the
-        # fixpoint test — stop early instead of burning the remaining
-        # rounds' scan+shuffle+collect (2 jobs each) on a no-op
-        converged = (new_cids == cids and new_mat.shape == mat.shape
-                     and bool((new_mat == mat).all()))
-        cids, mat = new_cids, new_mat
-        if converged:
-            break
-    return cids, mat
 
 
 def kmeans_assign(
@@ -147,8 +170,8 @@ def kmeans_assign(
     vecs = (df.select(F.col(id_col).alias("__id"),
                       F.col(vec_col).cast("array<double>").alias("__v"))
             .persist())
-    cids, mat = _fit_centroids(vecs, k, n_iter)
-    out = _assign(vecs, cids, mat).select(
+    mat = lloyd(vecs, 1, k, n_iter, dim=64)[0]
+    out = _assign(vecs, mat).select(
         F.col("__id").alias(id_col), "cluster",
         F.round("sq_dist", 6).alias("sq_dist"))
     vecs.unpersist()
@@ -185,8 +208,8 @@ def semantic_dedup_pairs(
     vecs = (df.select(F.col(id_col).alias("__id"),
                       F.col(vec_col).cast("array<double>").alias("__v"))
             .persist())
-    cids, mat = _fit_centroids(vecs, k, n_iter)
-    nearest = _nearest_expr(cids, mat, max(1, n_assign))
+    mat = lloyd(vecs, 1, k, n_iter, dim=64)[0]
+    nearest = _nearest_expr(mat, max(1, n_assign))
     side = (vecs.select("__id", "__v",
                         F.explode(nearest("__v")["clusters"])
                         .alias("cluster")))
@@ -201,8 +224,7 @@ def semantic_dedup_pairs(
         # clusters the k knob targets.
         pdf = pdf.sort_values("__id")
         ids = pdf["__id"].to_numpy()
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["__v"].to_numpy()])
+        x = _stack(pdf["__v"])
         norms = np.linalg.norm(x, axis=1)
         norms[norms == 0.0] = 1.0                 # zero vec -> cos 0
         xn = x / norms[:, None]
@@ -309,8 +331,7 @@ def silhouette_labels(
         for pdf in it:
             if pdf.empty:
                 continue
-            Q = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["__q"].to_numpy()])
+            Q = _stack(pdf["__q"])
             n_rows = Q.shape[0]
             dists = np.empty((n_rows, k), dtype=np.float64)
             for j in range(k):

@@ -236,19 +236,6 @@ def _hashed_char_tokens(df: DataFrame, text_col: str, id_col: str,
     return norm.mapInPandas(_toks, "__id long, __h long")
 
 
-def minhash_signature(shingles: Column, num_perm: int = 64) -> Column:
-    """MinHash signature: per permutation j, min over shingle base-hashes of
-    (a_j*h + b_j) mod M61. Base hash xxhash64 is computed once per shingle."""
-    base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-
-    def perm_fn(a: int, b: int):
-        return lambda h: F.pmod(h * a + b, F.lit(_MERSENNE))
-
-    sigs = [F.array_min(F.transform(base, perm_fn(a, b)))
-            for a, b in _perm_params(num_perm)]
-    return F.array(*sigs)
-
-
 def jaccard(a: Column, b: Column) -> Column:
     inter = F.size(F.array_intersect(a, b))
     union = F.size(F.array_union(a, b))
@@ -922,7 +909,8 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
     clusters never look like that.
 
     Output: (doc_id, component_id) for every id present in ``pairs``;
-    LAZY — caches attached for ``_cache.release_intermediates``.
+    LAZY — caches attached for ``_cache.release_intermediates``. Raises
+    ``RuntimeError`` when labels still change after ``max_iter`` rounds.
     """
     s, d = F.col(id_a), F.col(id_b)
     # neighbours ∪ self, exploded row-locally: the self-loop keeps
@@ -959,6 +947,10 @@ def duplicate_components(pairs: DataFrame, id_a: str = "id_a",
         labels = stepped.select("id", "label")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"duplicate_components: labels still changing after {max_iter} "
+            "rounds (raise max_iter; rounds needed = component diameter)")
     return labels.select(F.col("id").alias("doc_id"),
                          F.col("label").alias("component_id"))
 

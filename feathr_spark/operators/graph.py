@@ -12,9 +12,11 @@ Scale design mirrors the components loop: per-iteration cost is one
 rank join + one contribution aggregate (two shuffles on node id), every
 frame is node- or edge-sized, scalar statistics (node count, dangling
 mass) travel as broadcast single-row frames — never a driver collect —
-and each round ends in an eager ``localCheckpoint()`` to TRUNCATE
-lineage (without it the final plan embeds every prior round; see the
-``duplicate_components`` docstring for the measured blowup).
+and rounds end in a lazy ``localCheckpoint(eager=False)`` to TRUNCATE
+lineage without a per-round job: the blocks materialize inside the
+caller's one action (without the cut the final plan embeds every prior
+round; see the ``duplicate_components`` docstring for the measured
+blowup).
 """
 from __future__ import annotations
 

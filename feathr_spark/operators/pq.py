@@ -16,12 +16,13 @@ dim-length dot product. Codebooks are km×dim doubles — driver/broadcast
 scale (the same documented bounded driver action as k-means centroids).
 
 Scale/plan shape:
-  * codebook training reuses the k-means machinery per subspace
-    (Arrow-batched matmul assignment, k×dim-row centroid shuffles), over
-    an optional deterministic hash-sample of the corpus — the standard
-    train-on-a-sample regime;
-  * encoding is ONE Arrow-batched pass, zero shuffle: all ``m`` argmins
-    come from a single stacked matmul per batch;
+  * codebook training IS the k-means kernel (``clustering.lloyd``) with
+    one block per subspace: all ``m`` codebooks train jointly, one
+    zero-shuffle Arrow-batched pass and one bounded collect per round,
+    over an optional deterministic hash-sample of the corpus — the
+    standard train-on-a-sample regime;
+  * encoding is ONE Arrow-batched pass, zero shuffle: the ``m`` argmins
+    per batch come from the kernel's per-block code helper;
   * scoring is ONE Arrow-batched pass over (id, codes) with a
     per-batch top-k cut, so the frame entering the final two-stage rank
     holds ≤ k rows per (batch, query), never the corpus.
@@ -41,7 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _planes, _two_stage_topk
+from .clustering import _block_codes, _stack, lloyd
+from .similarity import _two_stage_topk
 
 
 def _normalized(df: DataFrame, vec_col: str, id_col: str,
@@ -52,6 +54,14 @@ def _normalized(df: DataFrame, vec_col: str, id_col: str,
         F.col(id_col).alias(out_id),
         F.when(norm > 0, F.transform(v, lambda x: x / norm))
         .alias("__nv"))
+
+
+def _unit_rows(col: pd.Series) -> np.ndarray:
+    """Stacked Arrow batch of vectors, each row L2-normalized (zero rows
+    stay zero)."""
+    x = _stack(col)
+    n = np.linalg.norm(x, axis=1, keepdims=True)
+    return np.divide(x, n, out=x, where=n > 0)
 
 
 def pq_fit(
@@ -70,8 +80,6 @@ def pq_fit(
     in the UDF closures downstream."""
     if dim % m != 0:
         raise ValueError(f"pq_fit: dim {dim} not divisible by m {m}")
-    import math
-    d_sub = dim // m
     vecs = _normalized(corpus, vec_col, id_col, "__id") \
         .where(F.col("__nv").isNotNull())
     if train_fraction < 1.0:
@@ -79,108 +87,12 @@ def pq_fit(
             F.md5(F.concat(F.lit("pq"), F.col("__id").cast("string"))),
             1, 15), 16, 10).cast("double") / F.lit(float(16 ** 15)))
         vecs = vecs.where(draw < F.lit(float(train_fraction)))
-    vecs = vecs.persist()
-
-    # ALL m subspaces train JOINTLY: every Lloyd's iteration is exactly
-    # one corpus scan (one Arrow-batched assignment pass producing all m
-    # codes), one (subspace, code, position) mean shuffle whose partials
-    # collapse to m*kc*d_sub rows per task, and one bounded collect of
-    # the m codebooks (m*kc*d_sub doubles — the documented k-means driver
-    # action). The per-subspace-sequential formulation costs m times the
-    # jobs for identical results — at 16 subspaces that was ~20s of pure
-    # job-scheduling latency on the bench.
-    def _update(assigned: DataFrame) -> List[Tuple[List[int], np.ndarray]]:
-        exploded = assigned.select(
-            F.posexplode(F.col("__nv")).alias("__p", "__x"),
-            F.col("__codes"))
-        sub = (F.col("__p") / d_sub).cast("int")
-        cent = (exploded
-                .select(sub.alias("__s"),
-                        F.element_at(F.col("__codes"), sub + 1)
-                        .alias("__c"),
-                        (F.col("__p") % d_sub).alias("__pos"), "__x")
-                .groupBy("__s", "__c", "__pos")
-                .agg(F.round(F.avg("__x"), 6).alias("__m"))
-                .collect())
-        books = []
-        for s in range(m):
-            rows = [r for r in cent if r["__s"] == s]
-            cids = sorted({int(r["__c"]) for r in rows})
-            mat = np.zeros((len(cids), d_sub))
-            pos_of = {c: i for i, c in enumerate(cids)}
-            for r in rows:
-                mat[pos_of[int(r["__c"])], int(r["__pos"])] = r["__m"]
-            books.append((cids, mat))
-        return books
-
-    # init: per-subspace hyperplane-LSH buckets (deterministic, seedless
-    # per subspace via seed=s), all from ONE matmul pass
-    p_bits = max(1, int(math.ceil(math.log2(max(2, kc)))))
-    init_planes = [_planes(p_bits, d_sub, seed=s) for s in range(m)]
-    assigned = vecs.select(
-        "__nv", _codes_udf_init(init_planes, d_sub)(F.col("__nv"))
-        .alias("__codes"))
-    books = _update(assigned)
-    for _ in range(n_iter):
-        assigned = vecs.select(
-            "__nv", _codes_udf(books, d_sub)(F.col("__nv"))
-            .alias("__codes"))
-        books = _update(assigned)
+    vecs = vecs.select(F.col("__nv").alias("__v")).persist()
+    # code c of subspace s is row c of that subspace's matrix
+    books = [(list(range(len(mat))), mat)
+             for mat in lloyd(vecs, m, kc, n_iter, dim)]
     vecs.unpersist()
     return books
-
-
-def _codes_udf_init(init_planes, d_sub):
-    """Arrow-batched initial bucket codes: sign-bit buckets per subspace,
-    one stacked matmul per batch."""
-    from pyspark.sql.functions import pandas_udf
-
-    m = len(init_planes)
-    p_bits = init_planes[0].shape[0] if hasattr(init_planes[0], "shape") \
-        else len(init_planes[0])
-    mats = [np.asarray(p, dtype=np.float64) for p in init_planes]
-    weights = (1 << np.arange(p_bits))
-
-    @pandas_udf("array<int>")
-    def _init(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            xs = x[:, s * d_sub:(s + 1) * d_sub]
-            bits = ((xs @ mats[s].T) >= 0).astype(np.int64)
-            codes[:, s] = (bits * weights).sum(axis=1)
-        return pd.Series(list(codes))
-
-    return _init
-
-
-def _codes_udf(books, d_sub):
-    """Arrow-batched argmin codes against the current codebooks (POSITIONS
-    into each subspace's id-sorted centroid matrix)."""
-    from pyspark.sql.functions import pandas_udf
-
-    mats = [mat for _, mat in books]
-    m = len(mats)
-
-    @pandas_udf("array<int>")
-    def _assign(col: pd.Series) -> pd.Series:
-        if col.empty:
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s, cmat in enumerate(mats):
-            xs = x[:, s * d_sub:(s + 1) * d_sub]
-            d = ((xs * xs).sum(axis=1)[:, None]
-                 - 2.0 * (xs @ cmat.T)
-                 + (cmat * cmat).sum(axis=1)[None, :])
-            codes[:, s] = d.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return _assign
 
 
 def pq_encode(
@@ -195,25 +107,13 @@ def pq_encode(
     from pyspark.sql.functions import pandas_udf
 
     mats = [mat for _, mat in books]
-    d_sub = mats[0].shape[1]
-    m = len(mats)
 
     @pandas_udf("array<int>")
     def _enc(col: pd.Series) -> pd.Series:
         if col.empty:
             return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in col.to_numpy()])
-        n = np.linalg.norm(x, axis=1, keepdims=True)
-        np.divide(x, n, out=x, where=n > 0)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s, cmat in enumerate(mats):
-            xs = x[:, s * d_sub:(s + 1) * d_sub]
-            d = ((xs * xs).sum(axis=1)[:, None]
-                 - 2.0 * (xs @ cmat.T)
-                 + (cmat * cmat).sum(axis=1)[None, :])
-            codes[:, s] = d.argmin(axis=1)       # stable: first minimum
-        return pd.Series(list(codes))
+        return pd.Series(list(
+            _block_codes(_unit_rows(col), mats).astype(np.int32)))
 
     return corpus.select(F.col(id_col).alias("neighbor_id"),
                          _enc(F.col(vec_col)).alias("codes"))
@@ -257,8 +157,6 @@ def pq_topk(
     OPQ), which this operator exposes as ``kc``.
     Output: (query_id, rank, neighbor_id, score), rank 1-based.
     """
-    from pyspark.sql.functions import pandas_udf
-
     books = pq_fit(corpus, vec_col, id_col, m, kc, n_iter,
                    train_fraction, dim)
     if rerank == "auto":
@@ -294,23 +192,12 @@ def pq_topk(
     # per-subspace argmin, LUT gather) are byte-identical to the split
     # formulation. pq_encode stays for the persistable-index path.
     mats = [mat for _, mat in books]
-    m_eff = len(mats)
 
     def _encode_score(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            x = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["__vec"].to_numpy()])
-            n = np.linalg.norm(x, axis=1, keepdims=True)
-            np.divide(x, n, out=x, where=n > 0)
-            codes = np.empty((len(x), m_eff), dtype=np.int64)
-            for s, cmat in enumerate(mats):
-                xs = x[:, s * d_sub:(s + 1) * d_sub]
-                dd = ((xs * xs).sum(axis=1)[:, None]
-                      - 2.0 * (xs @ cmat.T)
-                      + (cmat * cmat).sum(axis=1)[None, :])
-                codes[:, s] = dd.argmin(axis=1)   # stable: first minimum
+            codes = _block_codes(_unit_rows(pdf["__vec"]), mats)
             nb = pdf["neighbor_id"].to_numpy().astype(np.int64)
             # scores (B, nq): sum of per-subspace LUT gathers
             sc = np.zeros((len(codes), len(qids)), dtype=np.float64)

@@ -1377,9 +1377,11 @@ def _selection_percentiles_on(vals, fracs, buckets):
         r = (n - 1) * f
         targets.setdefault(int(math.floor(r)), None)
         targets.setdefault(int(math.ceil(r)), None)
-    width = (hi - lo) / float(buckets)
+    # (v - lo) / (hi - lo) * buckets, not (v - lo) / width: a subnormal
+    # spread underflows width = (hi - lo) / buckets to 0 (values 0 and
+    # 5e-324 divided by zero). Any monotone bucketing stays exact.
     bkt = F.least(F.floor((F.col("__v") - F.lit(float(lo)))
-                          / F.lit(width)),
+                          / F.lit(float(hi - lo)) * F.lit(float(buckets))),
                   F.lit(buckets - 1)).cast("long")
     # bounded collect: <= `buckets` (bucket-id, count) rows
     hist = sorted(vals.groupBy(bkt.alias("__b"))

@@ -501,3 +501,15 @@ def test_selection_percentile_property_matches_builtin(spark, data):
     b = df.agg(F.percentile(F.col("v"), F.lit(float(frac)))) \
         .collect()[0][0]
     assert a == b, (vals, frac, buckets, a, b)
+
+
+def test_selection_percentile_subnormal_spread(spark):
+    """Hypothesis-found case: a spread of one subnormal underflowed the
+    bucket width to 0 and the histogram divided by zero."""
+    from pyspark.sql import functions as F
+    from feathr_spark.operators.stats import selection_percentile
+    df = spark.createDataFrame([(0.0,), (5e-324,)], "v double")
+    for frac in (0.0, 0.5, 1.0):
+        a = selection_percentile(df, "v", frac, buckets=2).collect()[0][0]
+        b = df.agg(F.percentile("v", F.lit(frac))).collect()[0][0]
+        assert a == b

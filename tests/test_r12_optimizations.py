@@ -10,21 +10,7 @@ union build).
 """
 
 import pytest
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (SparkSession.builder.master("local[4]")
-         .appName("r12-opt-tests")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .config("spark.sql.session.timeZone", "UTC")
-         .getOrCreate())
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
 
 
 def test_funnel_latency_selection_mode_equals_buffer(spark):
@@ -146,3 +132,29 @@ def test_duplicate_components_matches_union_find(spark):
             parent[max(ra, rb)] = min(ra, rb)
     want = {x: find(x) for x in parent}
     assert got == want
+
+
+def test_duplicate_components_raises_at_round_limit(spark):
+    """A path longer than ``max_iter`` rounds can label must raise, not
+    return half-propagated labels; with enough rounds the same path is
+    one component rooted at its minimum id."""
+    from feathr_spark.operators.dedup import duplicate_components
+    df = spark.createDataFrame([(i, i + 1) for i in range(12)],
+                               "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="max_iter"):
+        duplicate_components(df, max_iter=3)
+    got = {r["doc_id"]: r["component_id"]
+           for r in duplicate_components(df, max_iter=20).collect()}
+    assert got == {i: 0 for i in range(13)}
+
+
+def test_spread_by_surfaces_repartition_errors(spark):
+    """Only the partition-count lookup falls back; a bad column is the
+    caller's error and must surface as the analysis error itself."""
+    from pyspark.errors import AnalysisException
+    from feathr_spark.operators._partition import spread_by
+    df = spark.createDataFrame([(1,), (2,)], "x long")
+    assert spread_by(df, F.col("x")).rdd.getNumPartitions() == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+    with pytest.raises(AnalysisException):
+        spread_by(df, F.col("no_such_column"))
